@@ -1,8 +1,8 @@
 """One SQL text scanner shared by every component that must tell code
-apart from non-code before regex-level reasoning: the query pruner
-(:mod:`quackpipe_spark.query`), the dialect rewriter
-(:mod:`quackpipe_spark.functions.dialect`), and the stdin statement
-splitter (:mod:`quackpipe_spark.__main__`).
+apart from non-code before regex-level reasoning: the dialect rewriter
+(:mod:`quackpipe_spark.functions.dialect`), the read_parquet interception
+(:mod:`quackpipe_spark.query`; its pruning reads Catalyst's parse tree
+instead), and the stdin statement splitter (:mod:`quackpipe_spark.__main__`).
 
 Why ONE scanner: three hand-rolled scanners drifted three times in
 round 9 (backslash-escape desync, double-quoted literals treated as
@@ -115,8 +115,7 @@ def blank_noncode(text: str) -> str:
     enclosing quotes are kept, so a literal still reads as an empty
     token) and ENTIRE comment spans. Offsets are preserved, so a match
     found in the blanked text can read its true value from the original
-    at the same span (the pruner's epoch_ns bound literals rely on
-    this)."""
+    at the same span (read_parquet's path literals rely on this)."""
     buf = list(text)
     for kind, a, b in scan_segments(text):
         if kind == "comment":
@@ -132,10 +131,10 @@ def blank_noncode(text: str) -> str:
         elif kind == "ident":
             # a PLAIN-WORD identifier (`events`) stays visible: it means
             # exactly what the bare word means, and consumers legitimately
-            # read table names / the __timestamp column through it. Any
-            # other content (operators, spaces, quotes) is blanked — an
-            # identifier named `__timestamp >= 100` must not fabricate a
-            # pruning bound, and `a;b` must not split a statement.
+            # read names through it. Any other content (operators,
+            # spaces, quotes) is blanked — an identifier named
+            # `count() >= 100` must not read as code, and `a;b` must not
+            # split a statement.
             keep_close = _terminated(text, a, b)
             lo, hi = a + 1, b - 1 if keep_close else b
             if not (keep_close and _re.fullmatch(r"\w+", text[lo:hi], _re.ASCII)):

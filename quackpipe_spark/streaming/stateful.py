@@ -86,7 +86,7 @@ def _id_codec(docs: DataFrame, id_col: str):
         id_expr = F.coalesce(F.col(id_col).cast("long"), F.lit(_NULL_ID))
 
         def batch_min_of(pdf):
-            m = min(pdf["_id"].tolist())
+            m = min(pdf["_id"].tolist(), default=_NULL_ID)
             return None if m == _NULL_ID else m
 
         def batch_ids_of(pdf):

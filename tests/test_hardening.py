@@ -11,7 +11,7 @@ import pytest
 from quackpipe_spark.query import extract_time_bounds
 
 
-def test_time_bounds_ignore_or_queries():
+def test_time_bounds_ignore_or_queries(spark):
     """ANDing bounds from OR branches prunes to the (often empty)
     intersection — any OR must disable index pruning entirely."""
     assert extract_time_bounds(
@@ -19,7 +19,7 @@ def test_time_bounds_ignore_or_queries():
     ) == (None, None)
 
 
-def test_time_bounds_require_exact_unqualified_column():
+def test_time_bounds_require_exact_unqualified_column(spark):
     # a different column that merely ends in __timestamp must not prune
     assert extract_time_bounds(
         "SELECT * FROM t WHERE event__timestamp >= 500"
@@ -529,7 +529,7 @@ def test_split_statements_double_quoted_literals_and_nested_comments():
     ]
 
 
-def test_where_scope_excludes_spark_clause_tails():
+def test_where_scope_excludes_spark_clause_tails(spark):
     """SORT BY / DISTRIBUTE BY / CLUSTER BY are Spark clause tails — a
     __timestamp comparison there is a sort/partition key, never a row
     filter, and must not prune."""
@@ -770,7 +770,7 @@ def test_strip_passages_null_text_token_counts(spark):
     assert rows[1]["n_tokens"] == 8
 
 
-def test_double_quoted_literals_protected_everywhere():
+def test_double_quoted_literals_protected_everywhere(spark):
     """Spark parses "…" as a string literal (doubleQuotedIdentifiers off):
     the dialect rewriter must not rewrite count()/read_parquet() inside
     one, and the pruner must not extract a bound fabricated by one."""
@@ -806,7 +806,7 @@ def test_ndjson_batch_cap_splits_before_append():
     assert batches[1].num_rows() == 5
 
 
-def test_backslash_escaped_quotes_protected_everywhere():
+def test_backslash_escaped_quotes_protected_everywhere(spark):
     """Spark's default parser honors backslash escapes in string
     literals: a literal containing \\' must not desync the pruner's
     blanking (fabricated bound → silent missing rows), the dialect

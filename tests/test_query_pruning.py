@@ -10,13 +10,60 @@ from quackpipe_spark.query import extract_time_bounds
 NS = 10**9
 
 
-def test_extract_literal_bounds():
+@pytest.fixture(scope="module")
+def small_store(spark, tmp_path_factory):
+    """Tables events, ticks, ticks2, orders and ev (columns k, v, x), each
+    four files over __timestamp 0, 1-4, 5-9 and 10-12: every bound the
+    tests below gain prunes at least one file of the table it names."""
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine
+
+    cat = Catalog(str(tmp_path_factory.mktemp("small_store")))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    for name in ("events", "ticks", "ticks2", "orders", "ev"):
+        for lo, hi in ((0, 1), (1, 5), (5, 10), (10, 13)):
+            ts = list(range(lo, hi))
+            svc.store(
+                "d",
+                name,
+                {
+                    "k": [t % 3 for t in ts],
+                    "v": ts,
+                    "x": [t % 2 for t in ts],
+                    "__timestamp": ts,
+                },
+            )
+            svc.flush()
+    return QueryEngine(spark, cat)
+
+
+def _pruned_equals_unpruned(qe, q):
+    """The differential behind every bound a shape gains: ``q`` returns
+    the same rows with and without index pruning, and pruning does drop
+    files."""
+    import quackpipe_spark.query as Q
+
+    pruned_df = qe.sql(q, db="d")
+    pruned = sorted(map(tuple, pruned_df.collect()))
+    orig = Q.extract_time_bounds_per_table
+    Q.extract_time_bounds_per_table = lambda sql, tables, parsed=None: {}
+    try:
+        full_df = qe.sql(q, db="d")
+        unpruned = sorted(map(tuple, full_df.collect()))
+    finally:
+        Q.extract_time_bounds_per_table = orig
+    assert pruned == unpruned, q
+    assert len(pruned_df.inputFiles()) < len(full_df.inputFiles()), q
+
+
+def test_extract_literal_bounds(spark):
     assert extract_time_bounds("SELECT * FROM t WHERE __timestamp >= 100 AND __timestamp < 200") == (100, 200)
-    assert extract_time_bounds("WHERE __timestamp BETWEEN 5 AND 9") == (5, 9)
+    assert extract_time_bounds("SELECT * FROM t WHERE __timestamp BETWEEN 5 AND 9") == (5, 9)
     assert extract_time_bounds("SELECT 1") == (None, None)
 
 
-def test_extract_epoch_ns_idiom():
+def test_extract_epoch_ns_idiom(spark):
     # README.md:121 documented form
     lo, hi = extract_time_bounds(
         "SELECT * FROM weather WHERE __timestamp >= epoch_ns('2024-01-05 00:00:00'::TIMESTAMP) "
@@ -239,7 +286,7 @@ def test_rewrite_sql_tolerates_options():
     assert out == "SELECT count(*) FROM parquet.`/x/y.parquet`"
 
 
-def test_bounds_disabled_for_non_conjunctive_contexts():
+def test_bounds_disabled_for_non_conjunctive_contexts(spark):
     """Constructs under which an ANDed bound silently loses rows must
     disable pruning entirely: set ops across SELECT scopes, NOT(...)
     negation, CASE expressions, and subqueries."""
@@ -306,7 +353,32 @@ def test_mixed_case_table_reference_reregisters_view(spark, tmp_path):
     assert qe.sql("SELECT count(*) AS n FROM Weather", db="db").collect()[0]["n"] == 2
 
 
-def test_per_table_bounds_qualified_join():
+def test_identifier_relation_reregisters_view(spark, tmp_path):
+    """A table named through IDENTIFIER('…') is a read of that table: it
+    must re-register the full view, not read the pruned view an earlier
+    query left behind. A relation whose name only an expression knows
+    raises instead."""
+    from quackpipe_spark.catalog import Catalog
+    from quackpipe_spark.ingest import IngestService
+    from quackpipe_spark.query import QueryEngine
+
+    cat = Catalog(str(tmp_path / "root"))
+    svc = IngestService(spark, cat, save_timeout_s=3600)
+    for lo in (0, 100, 200, 300):
+        ts = list(range(lo, lo + 100))
+        svc.store("d", "ev", {"v": ts, "__timestamp": ts})
+        svc.flush()
+    qe = QueryEngine(spark, cat)
+    assert len(qe.table_files(cat.get("d", "ev"))) == 4
+    q = "SELECT count(*) AS n FROM ev WHERE __timestamp >= 350"
+    assert qe.sql(q, db="d").collect()[0]["n"] == 50
+    q = "SELECT count(*) AS n FROM IDENTIFIER('ev')"
+    assert qe.sql(q, db="d").collect()[0]["n"] == 400
+    with pytest.raises(ValueError, match="IDENTIFIER"):
+        qe.sql("SELECT count(*) AS n FROM IDENTIFIER(concat('e', 'v'))", db="d")
+
+
+def test_per_table_bounds_qualified_join(spark):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     q = (
@@ -330,7 +402,7 @@ def test_per_table_bounds_qualified_join():
     ) == {"ta": (3, None)}
 
 
-def test_per_table_bounds_alias_shadowing_and_ambiguity():
+def test_per_table_bounds_alias_shadowing_and_ambiguity(spark):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     # an alias that equals ANOTHER table's name must win over the bare
@@ -343,7 +415,7 @@ def test_per_table_bounds_alias_shadowing_and_ambiguity():
     assert ex(q2, ["ta", "tb"]) == {}
 
 
-def test_per_table_bounds_outer_join_scoping():
+def test_per_table_bounds_outer_join_scoping(spark):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     # ON-clause bound on the PRESERVED side of a LEFT JOIN does not
@@ -399,7 +471,7 @@ def test_join_query_prunes_both_tables_files(spark, tmp_path):
     assert got == sorted(r["v"] for r in full.collect())
 
 
-def test_self_join_never_prunes():
+def test_self_join_never_prunes(spark):
     """Both aliases of a self-joined table read the SAME registered view,
     so per-alias bounds must not prune it: a one-sided bound would drop
     the other alias's rows, and conflicting per-alias bounds would
@@ -433,12 +505,12 @@ def test_self_join_never_prunes():
     ) == {"ticks": (7, None)}
 
 
-def test_comma_join_disables_pruning():
-    """Legacy comma-join relations aren't captured by the FROM/JOIN
-    relation scan, so a comma SELF-join would evade the referenced-twice
-    guard — a qualified bound on one alias would prune files the comma
-    alias still reads (silent missing rows). Any top-level comma in a
-    FROM scope therefore disables pruning outright."""
+def test_comma_join_disables_pruning(spark, small_store):
+    """A comma join is a Join in the parse tree: a comma SELF-join reads
+    the table twice, so the referenced-twice guard refuses it (a
+    qualified bound on one alias would prune files the other alias still
+    reads — silent missing rows), while a comma join over distinct
+    tables bounds each side like an explicit JOIN."""
     from quackpipe_spark.query import extract_time_bounds_per_table
 
     # the motivating bug: comma self-join + one-sided qualified bound
@@ -447,19 +519,21 @@ def test_comma_join_disables_pruning():
         "WHERE e.__timestamp >= 123 AND e.k = e2.k",
         ["events"],
     ) == {}
-    # comma-join over two distinct tables: also conservative (the comma
-    # relation is invisible to the alias map, so nothing is attributable)
-    assert extract_time_bounds_per_table(
-        "SELECT * FROM events e, ticks t "
-        "WHERE e.__timestamp >= 5 AND e.k = t.k",
-        ["events", "ticks"],
-    ) == {}
-    # mixed JOIN ... ON cond, tbl — the comma hides after the ON clause
-    assert extract_time_bounds_per_table(
+    # comma-join over two distinct tables: each side is one relation
+    q = "SELECT * FROM events e, ticks t WHERE e.__timestamp >= 5 AND e.k = t.k"
+    assert extract_time_bounds_per_table(q, ["events", "ticks"]) == {
+        "events": (5, None)
+    }
+    _pruned_equals_unpruned(small_store, q)
+    # mixed JOIN ... ON cond, tbl
+    q = (
         "SELECT * FROM ticks a JOIN ticks2 b ON a.x = b.x, events e2 "
-        "WHERE a.__timestamp >= 5",
-        ["ticks", "ticks2", "events"],
-    ) == {}
+        "WHERE a.__timestamp >= 5"
+    )
+    assert extract_time_bounds_per_table(q, ["ticks", "ticks2", "events"]) == {
+        "ticks": (5, None)
+    }
+    _pruned_equals_unpruned(small_store, q)
     # non-FROM commas must NOT disable pruning: SELECT list, EXTRACT's
     # internal FROM, function args, GROUP BY lists
     assert extract_time_bounds_per_table(
@@ -468,7 +542,7 @@ def test_comma_join_disables_pruning():
         ["events"],
     ) == {"events": (1, None)}
 
-def test_bounds_only_from_where_clause_body():
+def test_bounds_only_from_where_clause_body(spark):
     """A __timestamp comparison OUTSIDE the WHERE clause body is not a
     row filter: in a SELECT list it's a projected boolean, in ORDER BY
     a sort key, in HAVING a post-aggregation predicate over possibly
@@ -506,7 +580,7 @@ def test_bounds_only_from_where_clause_body():
     assert ex("SELECT __timestamp >= 5 FROM events", ["events"]) == {}
 
 
-def test_bounds_require_top_level_conjunct():
+def test_bounds_require_top_level_conjunct(spark):
     """Inside the WHERE body a bound must be a TOP-LEVEL conjunct:
     chained comparisons, function arguments, and parenthesized operand
     groups all change its meaning and must not prune."""
@@ -537,7 +611,7 @@ def test_bounds_require_top_level_conjunct():
     ) == {"events": (5, 9)}
 
 
-def test_string_literals_cannot_move_scope_or_fabricate_bounds():
+def test_string_literals_cannot_move_scope_or_fabricate_bounds(spark):
     """Keyword scanning runs over literal-blanked text: user data like
     'WHERE __timestamp >= 1' must neither fabricate a bound nor shift
     the detected WHERE position; epoch_ns('...') bound literals are
@@ -565,7 +639,7 @@ def test_string_literals_cannot_move_scope_or_fabricate_bounds():
     assert got == {"events": (1704412800 * NS, None)}
 
 
-def test_cte_bounds_simple_chain():
+def test_cte_bounds_simple_chain(spark):
     """WITH x AS (bounded single-table SELECT) SELECT ... — the #1
     real-user shape: bounds inside a CTE body attribute to that body's
     one table (reference prunes by timerange regardless of SQL shape,
@@ -598,7 +672,7 @@ def test_cte_bounds_simple_chain():
     ) == {"events": (10, None), "ticks": (None, 50)}
 
 
-def test_cte_bounds_multi_scope_reads_never_prune():
+def test_cte_bounds_multi_scope_reads_never_prune(spark):
     """A table read by MORE THAN ONE scope (two bodies, or body + main
     subquery) is the self-join hazard in CTE clothing: one scope's
     bound would drop the other scope's rows."""
@@ -633,7 +707,7 @@ def test_cte_bounds_multi_scope_reads_never_prune():
     ) == {"ticks": (7, None)}
 
 
-def test_cte_bounds_shadowing_and_unsafe_scopes():
+def test_cte_bounds_shadowing_and_unsafe_scopes(spark):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     # CTE shadowing a real table: the main query's `events` is the CTE,
@@ -666,7 +740,7 @@ def test_cte_bounds_shadowing_and_unsafe_scopes():
     ) == {}
 
 
-def test_cte_bounds_refused_shapes():
+def test_cte_bounds_refused_shapes(spark, small_store):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     # RECURSIVE
@@ -675,19 +749,17 @@ def test_cte_bounds_refused_shapes():
         "SELECT * FROM r",
         ["events"],
     ) == {}
-    # column-list form doesn't parse → refuse
-    assert ex(
-        "WITH r(k) AS (SELECT k FROM events WHERE __timestamp >= 1) "
-        "SELECT * FROM r",
-        ["events"],
-    ) == {}
-    # comma-join ANYWHERE poisons the whole statement (its relations
-    # evade reference counting)
-    assert ex(
+    # column-list form: the body's Filter still sits on the relation
+    q = "WITH r(k) AS (SELECT k FROM events WHERE __timestamp >= 1) SELECT * FROM r"
+    assert ex(q, ["events"]) == {"events": (1, None)}
+    _pruned_equals_unpruned(small_store, q)
+    # comma join in the main query: the body's bound stands
+    q = (
         "WITH a AS (SELECT * FROM events WHERE __timestamp >= 10) "
-        "SELECT * FROM a, ticks WHERE a.k = ticks.k",
-        ["events", "ticks"],
-    ) == {}
+        "SELECT * FROM a, ticks WHERE a.k = ticks.k"
+    )
+    assert ex(q, ["events", "ticks"]) == {"events": (10, None)}
+    _pruned_equals_unpruned(small_store, q)
     # main that isn't a plain SELECT
     assert ex(
         "WITH a AS (SELECT * FROM events WHERE __timestamp >= 10) "
@@ -741,7 +813,7 @@ def test_cte_query_prunes_files_end_to_end(spark, tmp_path):
     )
 
 
-def test_derived_table_bounds_prune():
+def test_derived_table_bounds_prune(spark):
     """round-10: `FROM (SELECT … WHERE __timestamp >= X) t` prunes like
     the CTE spelling — the reference prunes by time range regardless of
     SQL shape (README.md:115)."""
@@ -767,21 +839,20 @@ def test_derived_table_bounds_prune():
     ) == {"events": (7, None)}
 
 
-def test_derived_table_bounds_refused_shapes():
+def test_derived_table_bounds_refused_shapes(spark, small_store):
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
-    # nested derived tables → two FROM-( groups → refuse
-    assert ex(
-        "SELECT * FROM (SELECT * FROM "
-        "(SELECT * FROM events WHERE __timestamp >= 5) u) t",
-        ["events"],
-    ) == {}
-    # two derived tables → refuse
-    assert ex(
+    # nested derived tables: the innermost Filter sits on the relation
+    q = "SELECT * FROM (SELECT * FROM (SELECT * FROM events WHERE __timestamp >= 5) u) t"
+    assert ex(q, ["events"]) == {"events": (5, None)}
+    _pruned_equals_unpruned(small_store, q)
+    # two derived tables: each body bounds its own table
+    q = (
         "SELECT * FROM (SELECT k FROM events WHERE __timestamp >= 5) a "
-        "JOIN (SELECT k FROM orders WHERE __timestamp >= 5) b ON a.k = b.k",
-        ["events", "orders"],
-    ) == {}
+        "JOIN (SELECT k FROM orders WHERE __timestamp >= 5) b ON a.k = b.k"
+    )
+    assert ex(q, ["events", "orders"]) == {"events": (5, None), "orders": (5, None)}
+    _pruned_equals_unpruned(small_store, q)
     # same table read by inner AND outer → self-join hazard → no prune
     assert ex(
         "SELECT count(*) AS n FROM "
@@ -807,17 +878,15 @@ def test_derived_table_bounds_refused_shapes():
         "(SELECT * FROM events WHERE __timestamp >= 5 OR k = 1) t",
         ["events"],
     ) == {}
-    # IN (SELECT …) is not a derived table — still refused outright
-    assert ex(
-        "SELECT * FROM events WHERE __timestamp >= 5 "
-        "AND k IN (SELECT k FROM orders)",
-        ["events", "orders"],
-    ) == {}
-    # comma-join anywhere still disables everything
-    assert ex(
-        "SELECT * FROM (SELECT * FROM events WHERE __timestamp >= 5) t, orders",
-        ["events", "orders"],
-    ) == {}
+    # a bound ANDed beside an IN (SELECT …) conjunct: the subquery reads
+    # another table, so events is still read once
+    q = "SELECT * FROM events WHERE __timestamp >= 5 AND k IN (SELECT k FROM orders)"
+    assert ex(q, ["events", "orders"]) == {"events": (5, None)}
+    _pruned_equals_unpruned(small_store, q)
+    # comma join beside a derived table: the body's bound stands
+    q = "SELECT * FROM (SELECT * FROM events WHERE __timestamp >= 5) t, orders"
+    assert ex(q, ["events", "orders"]) == {"events": (5, None)}
+    _pruned_equals_unpruned(small_store, q)
 
 
 def test_derived_query_prunes_files_end_to_end(spark, tmp_path):
@@ -854,7 +923,7 @@ def test_derived_query_prunes_files_end_to_end(spark, tmp_path):
     )
 
 
-def test_derived_table_bounds_nested_contexts():
+def test_derived_table_bounds_nested_contexts(spark):
     """A subquery's own WHERE conjunct filters THAT scope's table read in
     every consuming context — pruned files contain only rows the scope's
     WHERE rejects, so the scope's output (and anything composed on top,
@@ -926,11 +995,11 @@ def test_rp_interception_ignores_literals_and_comments(spark, tmp_path):
     assert got[0]["n"] == 2
 
 
-def test_unified_scope_analyzer_r14_semantics():
-    """Round-14 consolidation: the single-SELECT path runs through
-    _scope_bounds/_merge_scopes — one extraction path. Pins the two
-    intentionally-improved (strictly safe) attributions the unification
-    brought, plus the preserved sentinel/bare-fragment shapes."""
+def test_unified_scope_analyzer_r14_semantics(spark):
+    """Round-14 attributions: an unqualified bound binds to the one
+    relation a Filter reads, whatever else the candidate list holds;
+    extract_time_bounds takes the bound of the one table a statement
+    reads, whatever its name."""
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     # MULTI-candidate table list + a FROM reading exactly one of them:
@@ -948,12 +1017,14 @@ def test_unified_scope_analyzer_r14_semantics():
         "WHERE __timestamp >= 100) SELECT * FROM a",
         ["events"],
     ) == {"events": (100, None)}
-    # preserved: bare fragment, sentinel wrapper, self-join refusal
-    assert ex("WHERE __timestamp >= 5", ["_"]) == {"_": (5, None)}
-    assert ex("WHERE __timestamp >= 5", ["events"]) == {"events": (5, None)}
-    assert ex(
-        "SELECT * FROM anything WHERE __timestamp BETWEEN 3 AND 9", ["_"]
-    ) == {"_": (3, 9)}
+    # preserved: single-table wrapper, self-join refusal
+    assert extract_time_bounds("SELECT * FROM t WHERE __timestamp >= 5") == (5, None)
+    assert ex("SELECT * FROM events WHERE __timestamp >= 5", ["events"]) == {
+        "events": (5, None)
+    }
+    assert extract_time_bounds(
+        "SELECT * FROM anything WHERE __timestamp BETWEEN 3 AND 9"
+    ) == (3, 9)
     assert (
         ex(
             "SELECT * FROM ta a JOIN ta b ON a.k = b.k "
@@ -964,7 +1035,7 @@ def test_unified_scope_analyzer_r14_semantics():
     )
 
 
-def test_or_of_time_ranges_envelope_r14():
+def test_or_of_time_ranges_envelope_r14(spark, small_store):
     """VERDICT r13 #7: a top-level conjunct of the exact shape
     ``( range OR range [OR ...] )`` prunes by its interval-union ENVELOPE
     (min lo, max hi) — a file outside the envelope satisfies no branch.
@@ -1031,12 +1102,13 @@ def test_or_of_time_ranges_envelope_r14():
         "OR __timestamp BETWEEN 3 AND 4) OR v = 1",
         ["ev"],
     ) == {}
-    # a second, non-envelopable OR elsewhere poisons the scope
-    assert ex(
+    # a second, unrelated OR conjunct is ignored; the envelope stands
+    q = (
         "SELECT * FROM ev WHERE (__timestamp BETWEEN 1 AND 2 "
-        "OR __timestamp BETWEEN 3 AND 4) AND (v = 1 OR k = 2)",
-        ["ev"],
-    ) == {}
+        "OR __timestamp BETWEEN 3 AND 4) AND (v = 1 OR k = 2)"
+    )
+    assert ex(q, ["ev"]) == {"ev": (1, 4)}
+    _pruned_equals_unpruned(small_store, q)
     # conjunction inside a branch: not the exact shape
     assert ex(
         "SELECT * FROM ev WHERE (__timestamp >= 1 AND __timestamp <= 2 "
@@ -1060,12 +1132,11 @@ def test_or_of_time_ranges_envelope_r14():
     assert got["ev"][1] == 1677715200 * 10**9
 
 
-def test_or_envelope_unwraps_redundant_nesting_r15():
-    """VERDICT r14 optional #6: a conjunct group whose WHOLE body is
-    itself one parenthesized group peels before the OR split, so
-    ``((a OR b))`` (any depth, any spacing) prunes by the same envelope
-    as ``(a OR b)``. Only whole-body wraps peel — a group whose parens
-    are operand structure still refuses."""
+def test_or_envelope_unwraps_redundant_nesting_r15(spark, small_store):
+    """VERDICT r14 optional #6: parentheses are not in the parse tree, so
+    ``((a OR b))`` (any depth, any spacing), parenthesized branches and a
+    parenthesized conjunction all prune by the envelope of their ORed
+    ranges. A non-range branch still refuses."""
     from quackpipe_spark.query import extract_time_bounds_per_table as ex
 
     assert ex(
@@ -1086,18 +1157,20 @@ def test_or_envelope_unwraps_redundant_nesting_r15():
         "AND a.__timestamp >= 7",
         ["ev", "aux"],
     ) == {"ev": (1, 9), "aux": (7, None)}
-    # NOT the whole body: '( (a OR b) AND v = 1 )' must still refuse
-    assert ex(
+    # a parenthesized conjunction: '( (a OR b) AND v = 1 )' is two conjuncts
+    q = (
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2 "
-        "OR __timestamp BETWEEN 3 AND 4) AND v = 1)",
-        ["ev"],
-    ) == {}
-    # parenthesized BRANCHES are not the exact one-comparison shape
-    assert ex(
+        "OR __timestamp BETWEEN 3 AND 4) AND v = 1)"
+    )
+    assert ex(q, ["ev"]) == {"ev": (1, 4)}
+    _pruned_equals_unpruned(small_store, q)
+    # parenthesized BRANCHES are still one comparison each
+    q = (
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2) "
-        "OR (__timestamp BETWEEN 3 AND 4))",
-        ["ev"],
-    ) == {}
+        "OR (__timestamp BETWEEN 3 AND 4))"
+    )
+    assert ex(q, ["ev"]) == {"ev": (1, 4)}
+    _pruned_equals_unpruned(small_store, q)
     # nested wrap with a non-ts branch still refuses after peeling
     assert ex(
         "SELECT * FROM ev WHERE ((__timestamp BETWEEN 1 AND 2 OR v >= 5))",

@@ -9,14 +9,14 @@ from __future__ import annotations
 
 import pytest
 
-from quackpipe_spark.query import extract_time_bounds_per_table
+from quackpipe_spark.query import extract_time_bounds, extract_time_bounds_per_table
 from quackpipe_spark.sqltext import blank_noncode, scan_segments
 
 
 # ------------------------------------------------------------- sqltext
 
 
-def test_backtick_apostrophe_cannot_desync_quote_parity():
+def test_backtick_apostrophe_cannot_desync_quote_parity(spark):
     """The review's confirmed repro: an apostrophe inside a backtick
     identifier started a phantom literal, hiding a real OR and exposing
     literal contents as code — the pruner fabricated a bound under a
@@ -31,7 +31,7 @@ def test_backtick_apostrophe_cannot_desync_quote_parity():
     assert "__timestamp" not in b  # the literal's contents are blanked
 
 
-def test_backtick_ident_lexed_and_weird_contents_blanked():
+def test_backtick_ident_lexed_and_weird_contents_blanked(spark):
     kinds = [k for k, _a, _b in scan_segments("SELECT `a``b;c` FROM t")]
     assert "ident" in kinds
     b = blank_noncode("SELECT `a;b` FROM t; SELECT 2")
@@ -148,7 +148,7 @@ def test_rewrite_sql_unfolds_quote_escapes_in_paths():
 # ------------------------------------------------- unqualified bounds
 
 
-def test_unqualified_bound_refuses_two_relation_scope():
+def test_unqualified_bound_refuses_two_relation_scope(spark):
     """`FROM events JOIN myview` has TWO relations in scope: an
     unqualified __timestamp could bind to either, so no pruning — the
     main path had drifted looser than _scope_bounds (review r12)."""
@@ -157,13 +157,11 @@ def test_unqualified_bound_refuses_two_relation_scope():
     # qualified bounds still attribute through the alias map
     q2 = "SELECT * FROM events e JOIN myview v ON e.id = v.id WHERE e.__timestamp >= 100"
     assert extract_time_bounds_per_table(q2, ["events"]) == {"events": (100, None)}
-    # the single-relation and bare-fragment shapes keep pruning
+    # the single-relation and single-table-wrapper shapes keep pruning
     assert extract_time_bounds_per_table(
         "SELECT * FROM events WHERE __timestamp >= 100", ["events"]
     ) == {"events": (100, None)}
-    assert extract_time_bounds_per_table("WHERE __timestamp >= 5", ["_"]) == {
-        "_": (5, None)
-    }
+    assert extract_time_bounds("SELECT * FROM t WHERE __timestamp >= 5") == (5, None)
     # a sole NON-catalog relation must not inherit the bound either
     assert (
         extract_time_bounds_per_table(

@@ -12,7 +12,7 @@ import pytest
 from quackpipe_spark.query import _ts_literal_ns, extract_time_bounds_per_table
 
 
-def test_paren_join_relations_refuse_pruning():
+def test_paren_join_relations_refuse_pruning(spark):
     """`FROM (events e1 JOIN events e2 ON …)` declares relations
     _FROM_JOIN cannot see — the self-join reference count undercounts
     and a qualified bound on one alias would prune the shared view the
@@ -53,7 +53,7 @@ def test_paren_temp_view_not_plan_cacheable(spark, tmp_path):
     assert qe._plan_cacheable("SELECT * FROM events WHERE x = 1", {"events"}) is True
 
 
-def test_backticked_where_column_opens_no_phantom_scope():
+def test_backticked_where_column_opens_no_phantom_scope(spark):
     """A projected column named `where` (plain-word backtick contents
     stay visible after blanking) must not shift the WHERE scope into the
     SELECT list — a projected boolean is not a row filter."""
@@ -64,7 +64,7 @@ def test_backticked_where_column_opens_no_phantom_scope():
     assert extract_time_bounds_per_table(q2, ["events"]) == {"events": (5, None)}
 
 
-def test_trailing_semicolon_keeps_pruning():
+def test_trailing_semicolon_keeps_pruning(spark):
     """Spark accepts a trailing ';'; leaving it inside the WHERE scope
     failed the conjunct's scope-end check and silently disabled pruning
     for every copy-pasted query."""

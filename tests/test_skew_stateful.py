@@ -182,6 +182,63 @@ def test_streaming_exact_dedup_across_batches(spark, tmp_path):
     assert {k: v[:2] for k, v in latest.items()} == batch_map
 
 
+def test_integral_batch_min_of_empty_chunk(spark):
+    """An empty pandas chunk has no survivor: None, like the string path,
+    not min()'s opaque ValueError."""
+    import pandas as pd
+
+    from quackpipe_spark.streaming.stateful import _id_codec
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    _expr, _type, batch_min_of, batch_ids_of = _id_codec(docs, "doc_id")
+    null_id = (1 << 63) - 1
+    empty = pd.DataFrame({"_id": pd.Series([], dtype="int64")})
+    assert batch_min_of(empty) is None
+    assert batch_ids_of(empty) == []
+    assert batch_min_of(pd.DataFrame({"_id": [null_id]})) is None
+    assert batch_min_of(pd.DataFrame({"_id": [null_id, 7, 3]})) == 3
+
+
+@pytest.mark.parametrize("safe_cast", ["false", "true"])
+def test_streaming_exact_dedup_null_keep_id_row(spark, tmp_path, safe_cast):
+    """A group whose every id is NULL emits keep_id=None, is_new=True from
+    an object-dtype pandas frame: Spark's pandas→Arrow writer must cast
+    each object cell (None, python int, bool, str) to the declared LONG /
+    BOOLEAN / STRING output types, also with
+    convertToArrowArraySafely on."""
+    import hashlib
+
+    from quackpipe_spark.streaming.stateful import streaming_exact_dedup
+
+    conf = "spark.sql.execution.pandas.convertToArrowArraySafely"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, safe_cast)
+    src = tmp_path / "null_id_src"
+    src.mkdir()
+    (src / "b1.json").write_text(
+        '{"doc_id": null, "text": "orphan"}\n{"doc_id": 4, "text": "kept"}\n'
+    )
+    stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+    name = f"null_keep_id_{safe_cast}"
+    q = (
+        streaming_exact_dedup(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.sql(f"SELECT * FROM {name}").collect()
+    finally:
+        q.stop()
+        spark.conf.set(conf, prev)
+    fp = lambda t: hashlib.md5(t.encode()).hexdigest()
+    got = {r["fingerprint"]: (r["keep_id"], r["n_copies"], r["is_new"]) for r in rows}
+    assert got == {fp("orphan"): (None, 1, True), fp("kept"): (4, 1, True)}
+
+
 def test_streaming_exact_dedup_string_ids(spark, tmp_path):
     """String doc ids: survivors are the lexicographic min (same semantics
     as the batch operator's F.min), not silently-NULLed casts."""

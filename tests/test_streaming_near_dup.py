@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 
 from quackpipe_spark.operators.dedup import lsh_candidates, minhash_signatures
 from quackpipe_spark.streaming.stateful import streaming_near_dup_flags
@@ -105,9 +106,9 @@ def test_sig_partitions_fanout_is_row_identical(spark, tmp_path):
     )
     key = lambda r: (r["doc_id"], r["partner_id"], r["band"], r["band_hash"])
     assert sorted(map(key, fanned)) == sorted(map(key, base))
-    # and the fan-out keeps the invalid-count guard
-    import pytest
 
+
+def test_sig_partitions_rejects_non_positive_count(spark, tmp_path):
     empty_src = tmp_path / "sp_guard_src"
     empty_src.mkdir()
     with pytest.raises(ValueError, match="sig_partitions"):
